@@ -435,19 +435,20 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     swap the broadcast for a shuffled join and parquet-spill rounds like
     ``dedup.connected_components``.
     """
+    from dataqtor_spark.session import barrier
+
     w_col = F.col(weight) if weight else F.lit(1.0)
     m = (edges.groupBy(src, dst).agg(F.sum(w_col).alias("__w")))
     tot = m.groupBy(src).agg(F.sum("__w").alias("__wout"))
-    # localCheckpoint (eager), not persist: no action runs inside the loop,
-    # so a cache would never fill — and without lineage truncation the
+    # eager barrier, not persist: no action runs inside the loop, so a
+    # cache would never fill — and without lineage truncation the
     # returned plan would embed the matrix-build subtree once per round
-    mat = (m.join(tot, src)
-           .select(F.col(src).alias("__src"), F.col(dst).alias("__dst"),
-                   (F.col("__w") / F.col("__wout")).alias("__share"))
-           .localCheckpoint())
-    nodes = (mat.select(F.col("__src").alias("node"))
-             .unionByName(mat.select(F.col("__dst").alias("node")))
-             .distinct().localCheckpoint())
+    mat = barrier(m.join(tot, src)
+                  .select(F.col(src).alias("__src"), F.col(dst).alias("__dst"),
+                          (F.col("__w") / F.col("__wout")).alias("__share")))
+    nodes = barrier(mat.select(F.col("__src").alias("node"))
+                    .unionByName(mat.select(F.col("__dst").alias("node")))
+                    .distinct())
     n = nodes.count()
     base, link = (1.0 - damping) / n, damping
     rank = nodes.withColumn("r", F.round(F.lit(1.0 / n), 12))

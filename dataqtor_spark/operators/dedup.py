@@ -401,17 +401,18 @@ def minhash_dedup_pairs(df: DataFrame, id_col: str, text_col: str,
     """End-to-end MinHash near-dup pairs above an estimated-Jaccard threshold.
 
     The signature table is persisted (reused by banding and verification),
-    the small pair result is materialized via ``localCheckpoint``, and the
+    the small pair result is materialized via an eager ``barrier``, and the
     signatures are unpersisted before returning — repeated calls in a
     long-lived session do not accumulate storage.
     """
+    from dataqtor_spark.session import barrier
+
     sig = minhash_signatures(df, id_col, text_col, num_hashes, shingle_n)
     sig = sig.persist()  # reused by banding and verification
     try:
         cand = minhash_candidates(sig, id_col, num_hashes, bands)
-        return (minhash_similarity(sig, cand, id_col)
-                .filter(F.col("est_jaccard") >= threshold)
-                .localCheckpoint())
+        return barrier(minhash_similarity(sig, cand, id_col)
+                       .filter(F.col("est_jaccard") >= threshold))
     finally:
         sig.unpersist()
 
@@ -495,7 +496,7 @@ def minhash_containment_pairs_portable(df: DataFrame, id_col: str,
     you already run; exact :func:`ngram_containment_pairs` (d14) is the
     authority when superset recall itself is the requirement."""
     from dataqtor_spark.functions.exact import round_ratio
-    from dataqtor_spark.session import parallelize
+    from dataqtor_spark.session import barrier, parallelize
 
     # the signature pass carries the per-doc distinct-shingle count for
     # FREE (size of the same in-row hash array the signature minimizes
@@ -529,7 +530,7 @@ def minhash_containment_pairs_portable(df: DataFrame, id_col: str,
                .withColumn("est_containment", est)
                .filter(F.col("est_containment") >= threshold)
                .select("id_a", "id_b", "est_containment"))
-        return out.localCheckpoint()
+        return barrier(out)
     finally:
         sig.unpersist()
 
@@ -539,13 +540,14 @@ def minhash_dedup_pairs_portable(df: DataFrame, id_col: str, text_col: str,
                                  bands: int = 16, shingle_n: int = 3) -> DataFrame:
     """:func:`minhash_dedup_pairs` on the portable family — identical
     banding/verification, differentially testable against SQL."""
+    from dataqtor_spark.session import barrier
+
     sig = minhash_signatures_portable(df, id_col, text_col, num_hashes, shingle_n)
     sig = sig.persist()
     try:
         cand = minhash_candidates(sig, id_col, num_hashes, bands)
-        return (minhash_similarity(sig, cand, id_col)
-                .filter(F.col("est_jaccard") >= threshold)
-                .localCheckpoint())
+        return barrier(minhash_similarity(sig, cand, id_col)
+                       .filter(F.col("est_jaccard") >= threshold))
     finally:
         sig.unpersist()
 
@@ -609,6 +611,8 @@ def minhash_decontaminate(corpus: DataFrame, bench: DataFrame, id_col: str,
     sized next to a training corpus), candidates come from band-key
     equality — the corpus never self-joins and never shuffles beyond
     its signature pass."""
+    from dataqtor_spark.session import barrier
+
     sc = minhash_signatures_portable(corpus, id_col, text_col,
                                      num_hashes, shingle_n)
     # the corpus signature frame feeds BOTH the band explode and the
@@ -637,10 +641,10 @@ def minhash_decontaminate(corpus: DataFrame, bench: DataFrame, id_col: str,
         scored = (cand.join(a, "__cid").join(F.broadcast(b), "__bid")
                   .withColumn("est_jaccard", est)
                   .filter(F.col("est_jaccard") >= threshold))
-        return (scored.groupBy(F.col("__cid").alias(id_col))
-                .agg(F.count(F.lit(1)).cast("long").alias("n_bench_hits"),
-                     F.max("est_jaccard").alias("max_est_jaccard"))
-                .localCheckpoint())
+        return barrier(
+            scored.groupBy(F.col("__cid").alias(id_col))
+            .agg(F.count(F.lit(1)).cast("long").alias("n_bench_hits"),
+                 F.max("est_jaccard").alias("max_est_jaccard")))
     finally:
         sc.unpersist()
 
@@ -823,6 +827,8 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
     (WARNING).  Pass ``unbounded=True`` for exact semantics at any size
     (the d02 string_grouper-parity registration does), or an explicit
     int to pin the cut."""
+    from dataqtor_spark.session import barrier
+
     deferred_auto = False
     if unbounded:
         max_doc_freq = None
@@ -842,11 +848,11 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
         # consumer, no persist needed, two exchanges total
         pairs = _ngram_pairs_from_posts_nc(_ngram_posts_nc(ex), threshold,
                                            metric)
-        return pairs if not materialize else pairs.localCheckpoint()
+        return pairs if not materialize else barrier(pairs)
     if not materialize:
         # LAZY form for callers that immediately rematerialize the pairs
-        # themselves (connected_components writes its edge list to
-        # parquet): the eager localCheckpoint below would be a second
+        # themselves (connected_components pins its edge list with a
+        # barrier): the eager barrier below would be a second
         # materialization of the same rows.  The posts subplan feeds two
         # consumers (sizes, pair expansion) but shares ONE shuffle —
         # Catalyst's ReuseExchange computes it once per action, so no
@@ -870,8 +876,7 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
     # two consumers (sizes, pair expansion): persist the compact lists
     posts = posts.persist()
     try:
-        return _ngram_pairs_from_posts(posts, threshold, metric) \
-            .localCheckpoint()
+        return barrier(_ngram_pairs_from_posts(posts, threshold, metric))
     finally:
         posts.unpersist()
 
@@ -1048,15 +1053,16 @@ def embedding_near_dup_pairs(df: DataFrame, id_col: str, vec_col: str,
 # barriers use eager localCheckpoint (one job, no file commit — measured
 # ~3x cheaper per round at probe scale); every K-th round lands on
 # parquet, which truncates the checkpoint chain well below the >~15
-# depth where Spark 4 AQE plans were measured to re-expand, releases the
-# intermediate rounds' pinned blocks, and gives a durable restart point
-# at cluster scale (the GraphX/GraphFrames periodic-checkpoint cadence).
+# depth where Spark 4 AQE plans were measured to re-expand and releases
+# the intermediate rounds' pinned blocks (the GraphX/GraphFrames
+# periodic-checkpoint cadence).  A lineage-depth bound, not a durability
+# choice: with a checkpoint dir set every round is already a reliable
+# checkpoint, so the parquet round is skipped.
 _CC_STORAGE_EVERY = 6
 
 
 def connected_components(pairs: DataFrame, id_a: str = "id_a",
-                         id_b: str = "id_b", max_iter: int = 50,
-                         work_dir: str | None = None) -> DataFrame:
+                         id_b: str = "id_b", max_iter: int = 50) -> DataFrame:
     """(id, component) for every node in ``pairs`` — component = min node
     id reachable (the dedup-cluster builder: pairs from any near-dup
     detector in, survivor groups out).
@@ -1068,24 +1074,17 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     rather than O(diameter).  Round 0 skips the label join entirely
     (labels are the identity, so the neighbour min is ``min(dst)``).
 
-    Barrier flavor is durability-aware (the ``with_row_id``/
-    ``ordered_prefix`` auto-select convention): when the cluster operator
-    has configured ``sc.setCheckpointDir(<fault-tolerant path>)``, EVERY
-    barrier — edges and each round's labels — is a reliable
-    ``checkpoint()`` landing on that storage, so an executor loss at any
-    point of a long iteration restarts from the last completed round.
-    Otherwise (bench/local mode, no checkpoint dir) iteration barriers
-    are eager ``localCheckpoint``s with a parquet barrier every
-    ``_CC_STORAGE_EVERY`` rounds (``work_dir``, default a fresh temp
-    dir, holds the parquet rounds): near-dup graphs converge in 2-4
-    rounds, where the memory barrier is ~3x cheaper, while the periodic
-    storage barrier keeps checkpoint-chain depth bounded (AQE plan
-    re-expansion beyond ~15 chained checkpoints).  ``localCheckpoint``
-    blocks die with their executors, so the memory-barrier mode is a
-    single-node/bench convention — a cluster run wanting fault tolerance
-    sets a checkpoint dir (or at minimum passes ``work_dir``, which also
-    lands the EDGES on parquet — they are consumed every round, so a
-    lost edge block would otherwise kill all remaining rounds).
+    The edges frame and each round's labels are pinned with an eager
+    :func:`~dataqtor_spark.session.barrier`, so durability follows the
+    session's one rule: with a checkpoint dir set (a fault-tolerant path
+    on a cluster), every barrier is a reliable ``checkpoint()`` and an
+    executor loss at any point of a long iteration restarts from the
+    last completed round.  Without one (bench/local mode) the barriers
+    are ``localCheckpoint``s — near-dup graphs converge in 2-4 rounds,
+    where the memory barrier is ~3x cheaper — and every
+    ``_CC_STORAGE_EVERY``-th round lands on parquet in a fresh temp dir
+    to keep the checkpoint chain short (AQE plan re-expansion beyond ~15
+    chained checkpoints).
 
     Convergence is detected join-free: labels only ever decrease, so the
     exact (DECIMAL) sum of labels is stationary iff no label changed —
@@ -1101,39 +1100,18 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
 
     from pyspark.sql import Observation
 
-    from dataqtor_spark.operators.ordered import (
-        _spark_context_or_none, configured_checkpoint_dir)
+    from dataqtor_spark.session import _checkpoint_dir, barrier
 
     spark = pairs.sparkSession
-    d = work_dir
-    sc = _spark_context_or_none(spark)
-    # operator-CONFIGURED dir only: the driver-local temp dir that
-    # ordered_prefix's reliable=True local fallback auto-creates is
-    # session-global and would otherwise silently flip every later CC
-    # call into file-checkpoint-per-round mode with zero durability gain
-    durable = sc is not None and configured_checkpoint_dir(sc) is not None
-    # Memory barrier per round (eager localCheckpoint: one job, no file
-    # commit/listing) instead of a parquet round-trip: round time on a
-    # probe-scale graph dropped ~1.0 s -> ~0.35 s, and typical near-dup
-    # graphs converge in 2-3 rounds — far below the >~15-checkpoint chain
-    # depth where Spark 4 AQE plans were measured to re-expand.  Depth
-    # safety is kept by landing a STORAGE barrier every
-    # ``_CC_STORAGE_EVERY`` rounds (truncates to a parquet scan exactly
-    # like the old per-round write); ``work_dir`` given -> parquet rounds
-    # land there, and the edges frame (consumed by EVERY round) does too.
-    # With a configured checkpoint dir, every barrier is a reliable
-    # ``checkpoint()`` instead — durable at cluster scale by config.
-    e = (pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-         .unionByName(pairs.select(F.col(id_b).alias("src"),
-                                   F.col(id_a).alias("dst")))
-         .distinct())
-    if durable:
-        e = e.checkpoint()
-    elif work_dir is not None:
-        e.write.mode("overwrite").parquet(f"{work_dir}/edges")
-        e = spark.read.parquet(f"{work_dir}/edges")
-    else:
-        e = e.localCheckpoint()
+    # parquet rounds bound the localCheckpoint chain only; reliable
+    # checkpoints already truncate to storage every round
+    store_rounds = _checkpoint_dir(spark) is None
+    d = None
+    e = barrier(pairs.select(F.col(id_a).alias("src"),
+                             F.col(id_b).alias("dst"))
+                .unionByName(pairs.select(F.col(id_b).alias("src"),
+                                          F.col(id_a).alias("dst")))
+                .distinct())
     prev_sum = None
     labels = None
     last_stored = None
@@ -1167,15 +1145,11 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
                        .alias("label")))
         # the convergence sum rides the barrier action as an Observation
         # metric — no separate aggregate job per round (fires for both
-        # barrier flavors: eager localCheckpoint and the parquet write)
+        # round flavors: the eager barrier and the parquet write)
         obs = Observation(f"cc_sum_{it}")
         observed = new.observe(
             obs, F.sum(F.col("label").cast("decimal(38,0)")).alias("s"))
-        if durable:
-            # reliable checkpoint: labels land under sc.getCheckpointDir()
-            # every round — lineage truncated AND executor-loss-safe
-            labels = observed.checkpoint()
-        elif (it + 1) % _CC_STORAGE_EVERY == 0:
+        if store_rounds and (it + 1) % _CC_STORAGE_EVERY == 0:
             d = d or tempfile.mkdtemp(prefix="dataqtor_cc_")
             observed.write.mode("overwrite").parquet(f"{d}/labels_{it + 1}")
             labels = spark.read.parquet(f"{d}/labels_{it + 1}")
@@ -1183,7 +1157,7 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
                 shutil.rmtree(last_stored, ignore_errors=True)
             last_stored = f"{d}/labels_{it + 1}"
         else:
-            labels = observed.localCheckpoint()
+            labels = barrier(observed)
         s = obs.get["s"]
         if s == prev_sum:
             return labels.select(F.col("id"), F.col("label").alias("component"))
@@ -1301,19 +1275,21 @@ def semantic_dedup(df: DataFrame, id_col: str, vec_col: str,
     is an equi-join on cluster id that AQE splits on skewed (hot) clusters.
     """
     from dataqtor_spark.operators import ann as ANN
+    from dataqtor_spark.session import barrier
 
     centers = ANN.train_ivf_centroids_portable(
         df, id_col, vec_col, n_clusters, n_iter, cache_key=cache_key)
-    # lazy localCheckpoint: the assigned table feeds three consumers (both
+    # lazy barrier: the assigned table feeds three consumers (both
     # self-join sides + the final keep-join); without lineage truncation
     # the k×dim centroid-assignment expression would re-evaluate per use
-    c = (df.select(F.col(id_col).alias("__id"),
-                   F.transform(F.col(vec_col),
-                               lambda x: x.cast("double")).alias("__v"))
-         .withColumn("__nrm", _norm(F.col("__v")))
-         .withColumn("__cluster",
-                     F.expr(ANN._sql_nearest_cids("__v", centers, 1))[0])
-         .localCheckpoint(eager=False))
+    c = barrier(
+        df.select(F.col(id_col).alias("__id"),
+                  F.transform(F.col(vec_col),
+                              lambda x: x.cast("double")).alias("__v"))
+        .withColumn("__nrm", _norm(F.col("__v")))
+        .withColumn("__cluster",
+                    F.expr(ANN._sql_nearest_cids("__v", centers, 1))[0]),
+        eager=False)
     a, b = c.alias("a"), c.alias("b")
     removed = (a.join(b, (F.col("a.__cluster") == F.col("b.__cluster"))
                       & (F.col("a.__id") < F.col("b.__id")))

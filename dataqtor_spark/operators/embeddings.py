@@ -94,14 +94,16 @@ def embedding_drift(df: DataFrame, split: Column, id_col: str,
     and are mean'd through exact DECIMAL sums (the e04 device), so the
     report replays bit-identically in ANSI SQL."""
     from dataqtor_spark.functions.exact import round_ratio
+    from dataqtor_spark.session import barrier
 
     # ex feeds BOTH the centroid aggregate and the per-row dot join —
-    # pinned (lazy localCheckpoint) so the corpus posexplode materializes
+    # pinned (lazy barrier) so the corpus posexplode materializes
     # once instead of once per consumer (a free 2x at 100 TB embedding
     # volume; the blocks spill to disk on executors at cluster scale)
-    ex = (df.select(F.col(id_col).alias("__id"), split.alias("__a"),
-                    F.posexplode(_dbl(F.col(vec_col))).alias("__dim", "__x"))
-          .localCheckpoint(eager=False))
+    ex = barrier(
+        df.select(F.col(id_col).alias("__id"), split.alias("__a"),
+                  F.posexplode(_dbl(F.col(vec_col))).alias("__dim", "__x")),
+        eager=False)
     cent = (ex.groupBy("__dim")
             .agg(F.round(F.avg(F.when(F.col("__a"), F.col("__x"))), 6)
                  .alias("ma"),

@@ -648,13 +648,16 @@ def kendall_tau(df: DataFrame, col_x: str, col_y: str) -> DataFrame:
     Counts accumulate in DECIMAL(38,0) (pair products overflow BIGINT
     once n ≳ 4·10⁹ rows); the single float division happens at the end.
     """
+    from dataqtor_spark.session import barrier
+
     dec = "decimal(38,0)"
-    cells = (df.filter(F.col(col_x).isNotNull() & F.col(col_y).isNotNull())
-             .groupBy(F.col(col_x).alias("x"), F.col(col_y).alias("y"))
-             .agg(F.count(F.lit(1)).cast("decimal(19,0)").alias("cnt"))
-             # four consumers (pair join sides, marginals, total): cut the
-             # lineage so the input aggregates ONCE, not once per consumer
-             .localCheckpoint(eager=False))
+    # four consumers (pair join sides, marginals, total): cut the
+    # lineage so the input aggregates ONCE, not once per consumer
+    cells = barrier(
+        df.filter(F.col(col_x).isNotNull() & F.col(col_y).isNotNull())
+        .groupBy(F.col(col_x).alias("x"), F.col(col_y).alias("y"))
+        .agg(F.count(F.lit(1)).cast("decimal(19,0)").alias("cnt")),
+        eager=False)
     a, b = cells.alias("a"), cells.alias("b")
     # unordered distinct-cell pairs, once each (lexicographic order)
     pairs = a.join(

@@ -170,7 +170,7 @@ def mmr_select(corpus: DataFrame, queries: DataFrame,
     iteration, so the driver never sees candidate rows — rounds are
     bounded (k), per-round work is a candidate-set join + window pick,
     and per-query candidate state is shortlist-sized regardless of
-    corpus scale.  lazy ``localCheckpoint`` truncates the per-round lineage
+    corpus scale.  A lazy ``barrier`` truncates the per-round lineage
     (the d09 device) without a per-round driver barrier, keeping the
     final plan k-independent.
 
@@ -178,24 +178,26 @@ def mmr_select(corpus: DataFrame, queries: DataFrame,
     DOUBLE)``.  Determinism: rel and pairwise sims round to 6 dp before
     scoring, picks tie-break on ascending neighbor id.
     """
+    from dataqtor_spark.session import barrier
+
     sl = brute_force_topk(corpus, queries, id_col, vec_col,
                           k=shortlist, query_id_col=query_id_col)
     vecs = corpus.select(F.col(id_col).alias("neighbor_id"),
                          _as_double(F.col(vec_col)).alias("__v"))
-    cand = (sl.join(vecs, "neighbor_id")
-            .select("query_id", "neighbor_id",
-                    F.col("cosine").alias("rel"), "__v")
-            .localCheckpoint(eager=False))
+    cand = barrier(sl.join(vecs, "neighbor_id")
+                   .select("query_id", "neighbor_id",
+                           F.col("cosine").alias("rel"), "__v"),
+                   eager=False)
     a = cand.select("query_id", F.col("neighbor_id").alias("__a"),
                     F.col("__v").alias("__va"))
     b = cand.select("query_id", F.col("neighbor_id").alias("__b"),
                     F.col("__v").alias("__vb"))
-    pairs = (a.join(b, "query_id")
-             .filter(F.col("__a") != F.col("__b"))
-             .select("query_id", "__a", "__b",
-                     F.round(cosine(F.col("__va"), F.col("__vb")), 6)
-                     .alias("__sim"))
-             .localCheckpoint(eager=False))
+    pairs = barrier(a.join(b, "query_id")
+                    .filter(F.col("__a") != F.col("__b"))
+                    .select("query_id", "__a", "__b",
+                            F.round(cosine(F.col("__va"), F.col("__vb")), 6)
+                            .alias("__sim")),
+                    eager=False)
     base = cand.select("query_id", "neighbor_id", "rel")
     w = Window.partitionBy("query_id").orderBy(
         F.desc("__score"), F.asc("neighbor_id"))
@@ -225,5 +227,5 @@ def mmr_select(corpus: DataFrame, queries: DataFrame,
                         "neighbor_id", "rel",
                         F.col("__score").alias("mmr_score")))
         sel = pick if sel is None else sel.unionByName(pick)
-        sel = sel.localCheckpoint(eager=False)
+        sel = barrier(sel, eager=False)
     return sel

@@ -86,8 +86,10 @@ def similar_strings(df: DataFrame, col: str, min_similarity: float = 0.52,
     # without it the whole tokenize→tf→idf→norm pipeline is planned and
     # executed twice (the plan showed ~31 exchanges, half of them the
     # duplicated subtree).  The small ranked result is materialized via
-    # localCheckpoint so the vectors can be unpersisted before returning —
-    # no storage leak across repeated calls.
+    # an eager barrier so the vectors can be unpersisted before returning
+    # — no storage leak across repeated calls.
+    from dataqtor_spark.session import barrier
+
     vec = tfidf_vectors(df, col, n, clean_regex).persist()
     try:
         # posting-list sparse dot product: ONE exchange of the vector
@@ -117,7 +119,7 @@ def similar_strings(df: DataFrame, col: str, min_similarity: float = 0.52,
                  .agg(F.round(F.sum("p"), 6).alias("similarity"))
                  .filter(F.col("similarity") >= min_similarity))
         out = pairs.orderBy(F.desc("similarity"), F.asc("left_side"), F.asc("right_side"))
-        return (out.limit(top_n) if top_n else out).localCheckpoint()
+        return barrier(out.limit(top_n) if top_n else out)
     finally:
         vec.unpersist()
 
@@ -132,7 +134,7 @@ def similar_strings_lsh_portable(df: DataFrame, col: str,
     the whole candidate pipeline is differentially checkable against an
     ANSI-SQL oracle.  Returns (left_side, right_side, est_jaccard)."""
     from dataqtor_spark.operators import dedup as DD
-    from dataqtor_spark.session import parallelize
+    from dataqtor_spark.session import barrier, parallelize
 
     base = (parallelize(df.select(F.col(col).alias("value"))
                         .filter(F.col("value").isNotNull()).distinct())
@@ -146,11 +148,11 @@ def similar_strings_lsh_portable(df: DataFrame, col: str,
            .persist())
     try:
         cand = DD.minhash_candidates(sig, "__id", num_hashes, bands)
-        return (DD.minhash_similarity(sig, cand, "__id")
-                .filter(F.col("est_jaccard") >= threshold)
-                .select(F.col("id_a").alias("left_side"),
-                        F.col("id_b").alias("right_side"), "est_jaccard")
-                .localCheckpoint())
+        return barrier(DD.minhash_similarity(sig, cand, "__id")
+                       .filter(F.col("est_jaccard") >= threshold)
+                       .select(F.col("id_a").alias("left_side"),
+                               F.col("id_b").alias("right_side"),
+                               "est_jaccard"))
     finally:
         sig.unpersist()
 

@@ -556,10 +556,10 @@ def repeated_spans(df: DataFrame, id_col: str = "doc_id",
     boilerplate creates.]  The shared-hash set derived from the deduped
     frame is bounded by distinct shared windows and joins back as a hash
     semi-join AQE broadcasts when small and skew-splits when not; the
-    (hash, doc) frame is pinned (lazy ``localCheckpoint``) so the explode
+    (hash, doc) frame is pinned (lazy ``barrier``) so the explode
     feeding it runs once across both consumers.
     """
-    from dataqtor_spark.session import parallelize
+    from dataqtor_spark.session import barrier, parallelize
 
     # raw text through the exchange, tokenize above it (single-row-group
     # inputs otherwise tokenize inside the one-task scan stage)
@@ -574,9 +574,8 @@ def repeated_spans(df: DataFrame, id_col: str = "doc_id",
                         " ", F.slice(F.col("__tk"), s, span_tokens)))))
     ex = base.select("__id", F.explode(wins_expr).alias("__h"))
     # per-(hash, doc) occurrence counts first: partial-agg, skew-immune
-    hd = (ex.groupBy("__h", "__id")
-          .agg(F.count(F.lit(1)).alias("__occ"))
-          .localCheckpoint(eager=False))
+    hd = barrier(ex.groupBy("__h", "__id")
+                 .agg(F.count(F.lit(1)).alias("__occ")), eager=False)
     # "shared" per hash from the deduped frame.  min(id) ≠ max(id) covers
     # the default min_docs=2 with two agg buffers; hd rows are distinct
     # (hash, doc) pairs, so count(*) IS the distinct-doc count for the
@@ -648,7 +647,7 @@ def dsir_importance(df: DataFrame, target_pred: Column,
     final top-k is a TakeOrderedAndProject, never a global sort.
     Returns ``(id, n_feats, log_weight, rank)`` for the k selected docs.
     """
-    from dataqtor_spark.session import parallelize
+    from dataqtor_spark.session import barrier, parallelize
 
     # repartition the RAW text first, tokenize above the exchange: the
     # driver testdata is one row group per file, so an inner tokenize
@@ -713,11 +712,9 @@ def dsir_importance(df: DataFrame, target_pred: Column,
 
         # rank AFTER the limit — TakeOrderedAndProject bounds the window
         w = Window.orderBy(F.col("log_weight").desc(), F.col("__id"))
-        out = (top.select(F.col("__id").alias(id_col), "n_feats",
-                          "log_weight",
-                          F.row_number().over(w).cast("long").alias("rank"))
-               .localCheckpoint())
-        return out
+        return barrier(top.select(
+            F.col("__id").alias(id_col), "n_feats", "log_weight",
+            F.row_number().over(w).cast("long").alias("rank")))
     finally:
         if feat is not None:
             feat.unpersist()
@@ -756,7 +753,7 @@ def ngram_lm_score(df: DataFrame, ref_pred: Column,
     build sides); one per-doc sum.  Linear in corpus tokens.
     """
     from dataqtor_spark.functions.exact import round_ratio
-    from dataqtor_spark.session import parallelize
+    from dataqtor_spark.session import barrier, parallelize
 
     # raw text through the exchange, tokenize above it (single-row-group
     # inputs otherwise tokenize inside the one-task scan stage)
@@ -844,13 +841,12 @@ def ngram_lm_score(df: DataFrame, ref_pred: Column,
                        F.sum("__c").cast("long").alias("__np")))
         # avg = sum/n as an exact rational: sum is DECIMAL(38,9) → ·10⁹
         # integer numerator over n·10⁹
-        out = scored.select(
+        return barrier(scored.select(
             F.col("__id").alias(id_col),
             F.col("__np").alias("n_tokens"),
             round_ratio((F.col("__sum") * 1000000000).cast("decimal(38,0)"),
                         F.col("__np").cast("decimal(38,0)") * 1000000000,
-                        6).alias("avg_logprob")).localCheckpoint()
-        return out
+                        6).alias("avg_logprob")))
     finally:
         toks.unpersist()
         ref_uni.unpersist()
@@ -943,7 +939,7 @@ def scrub_shared_spans(df: DataFrame, id_col: str = "doc_id",
     "empty join").
 
     Scale shape: one posexplode of xxhash64'd windows (8 bytes/row,
-    pinned via lazy ``localCheckpoint`` so it materializes once for its
+    pinned via a lazy ``barrier`` so it materializes once for its
     two consumers), a skew-immune shared-hash derivation — groupBy(hash)
     with min/max agg buffers (map-side partials; a license-header span in
     millions of docs collapses per map task, and AQE splits any residual
@@ -956,7 +952,7 @@ def scrub_shared_spans(df: DataFrame, id_col: str = "doc_id",
     bounded by document length, never by corpus size, so the whole op is
     linear in corpus tokens at 100 TB.
     """
-    from dataqtor_spark.session import parallelize
+    from dataqtor_spark.session import barrier, parallelize
 
     # raw text through the exchange, tokenize above it (single-row-group
     # inputs otherwise tokenize inside the one-task scan stage)
@@ -969,8 +965,9 @@ def scrub_shared_spans(df: DataFrame, id_col: str = "doc_id",
         F.transform(F.sequence(F.lit(1), F.col("__n") - (span_tokens - 1)),
                     lambda s: F.xxhash64(F.concat_ws(
                         " ", F.slice(F.col("__tk"), s, span_tokens)))))
-    ex = (base.select("__id", F.posexplode(wins_expr).alias("__p", "__h"))
-          .localCheckpoint(eager=False))
+    ex = barrier(base.select("__id",
+                             F.posexplode(wins_expr).alias("__p", "__h")),
+                 eager=False)
     # shared-hash set: min(id) ≠ max(id) for the default min_docs=2 (two
     # agg buffers, partial-agg); exact distinct-doc count otherwise —
     # Spark plans count(DISTINCT id) as the two-stage (hash, id) partial
@@ -1349,7 +1346,7 @@ def paragraph_dedup(df: DataFrame, id_col: str = "doc_id",
     Returns ``(id, n_chunks, n_dropped, clean_text)``.
 
     Scale shape: one explode of (id, chunk_no, chunk, md5) rows, pinned
-    (lazy ``localCheckpoint``) so it materializes once for its two
+    (lazy ``barrier``) so it materializes once for its two
     consumers.  The shared-hash derivation is a groupBy(hash) over min/max
     agg buffers (count(DISTINCT id) for ``max_df`` > 1) — map-side partial
     aggregation, so a boilerplate chunk shared by millions of documents
@@ -1363,6 +1360,8 @@ def paragraph_dedup(df: DataFrame, id_col: str = "doc_id",
     keeps the hash replayable in the ANSI-SQL oracle; swap for xxhash64
     when differential checkability is not needed.
     """
+    from dataqtor_spark.session import barrier
+
     base = df.select(F.col(id_col).alias("__id"),
                      _clean_tokens(text_col).alias("__tk"))
     nchunks = F.ceil(F.size("__tk") / chunk_tokens).cast("int")
@@ -1376,11 +1375,10 @@ def paragraph_dedup(df: DataFrame, id_col: str = "doc_id",
                 " ", F.slice(F.col("__tk"), i * chunk_tokens + 1,
                              chunk_tokens)))).otherwise(
         F.array().cast("array<string>"))
-    chunks = (base.select(
+    chunks = barrier(base.select(
         "__id",
         F.posexplode(chunk_arr).alias("__cno", "__chunk"))
-        .withColumn("__h", F.md5(F.col("__chunk")))
-        .localCheckpoint(eager=False))
+        .withColumn("__h", F.md5(F.col("__chunk"))), eager=False)
     if max_df == 1:
         sh = (chunks.groupBy("__h")
               .agg((F.min("__id") != F.max("__id")).alias("__m")))
@@ -1433,6 +1431,8 @@ def bm25_search(df: DataFrame, terms: list[str], id_col: str = "doc_id",
     addend order (bit-identical across engines and partitionings); ties
     break on id.  Returns the top ``top_k`` (id, score).
     """
+    from dataqtor_spark.session import barrier
+
     terms = list(dict.fromkeys(terms))  # dedupe, keep order: a repeated
     # query term must not double its contribution (bag-of-DISTINCT-terms,
     # matching the tf-groupBy semantics of the SQL twin)
@@ -1476,13 +1476,13 @@ def bm25_search(df: DataFrame, terms: list[str], id_col: str = "doc_id",
             piece = (F.when(tf > 0, F.round(contrib, 8))
                      .otherwise(F.lit(0.0)).cast("decimal(28,8)"))
             score = piece if score is None else score + piece
-        return (per_doc.crossJoin(F.broadcast(corpus))
-                .filter(sum((F.col(f"__tf{i}") for i in range(len(terms))),
-                            F.lit(0)) > 0)
-                .select(F.col("__id").alias(id_col),
-                        F.round(score, 4).cast("double").alias("score"))
-                .orderBy(F.desc("score"), F.asc(id_col)).limit(top_k)
-                .localCheckpoint())
+        return barrier(
+            per_doc.crossJoin(F.broadcast(corpus))
+            .filter(sum((F.col(f"__tf{i}") for i in range(len(terms))),
+                        F.lit(0)) > 0)
+            .select(F.col("__id").alias(id_col),
+                    F.round(score, 4).cast("double").alias("score"))
+            .orderBy(F.desc("score"), F.asc(id_col)).limit(top_k))
     finally:
         per_doc.unpersist()
 

@@ -9051,15 +9051,17 @@ def er03_blocking_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("id_a", "id_b")
 
     def _cand():
-        # eager localCheckpoint: cand feeds TWO consumers (the candidate
+        from dataqtor_spark.session import barrier
+
+        # eager barrier: cand feeds TWO consumers (the candidate
         # count and the hit join) — lazy, each would recompute the full
         # signature + banding pipeline; materialized, the corpus-sized
         # signature pass runs exactly once (candidate pairs are bounded
         # by true-duplicate density, not corpus size, so the pin is small)
         sig = DD.minhash_signatures_portable(docs, "doc_id", "text",
                                              _MH_HASHES, _MH_SHINGLE)
-        return DD.minhash_candidates(sig, "doc_id", _MH_HASHES,
-                                     _MH_BANDS).localCheckpoint()
+        return barrier(DD.minhash_candidates(sig, "doc_id", _MH_HASHES,
+                                             _MH_BANDS))
 
     with ThreadPoolExecutor(2) as ex:
         truth_f, cand_f = ex.submit(_truth), ex.submit(_cand)
@@ -9386,6 +9388,8 @@ def pr26_nmi_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     a feature-selection pass reads.  NMI = MI / min(H) computed from the
     already-rounded components so both engines divide identical values;
     each pair is one joint-count shuffle (pr18's shape)."""
+    from dataqtor_spark.session import barrier
+
     o = _t(spark, sf_dir, "orders")
     dow = (F.datediff(F.to_date("o_orderdate"),
                       F.lit("1995-01-01").cast("date")) % 7)
@@ -9398,9 +9402,9 @@ def pr26_nmi_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # every pair's joint table re-aggregates the cube — identical integer
     # counts, so the rounded entropy/MI doubles cannot differ from the
     # per-pair scans this replaces (3 orders scans -> 1).  Eager
-    # localCheckpoint so the pass runs once across the 3 pair consumers.
-    cube = (src.groupBy(*labels)
-            .agg(F.count(F.lit(1)).alias("__n")).localCheckpoint())
+    # barrier so the pass runs once across the 3 pair consumers.
+    cube = barrier(src.groupBy(*labels)
+                   .agg(F.count(F.lit(1)).alias("__n")))
     outs = []
     for i, la in enumerate(labels):
         for lb in labels[i + 1:]:

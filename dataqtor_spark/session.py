@@ -107,6 +107,53 @@ def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None
     return out
 
 
+def _spark_context_or_none(spark):
+    """The driver-side SparkContext, or None on Spark Connect (where the
+    session has no local JVM context — checkpoint/localCheckpoint still
+    work, as server-executed commands, but ``sc``-level introspection
+    like ``getCheckpointDir``/``defaultParallelism`` does not exist)."""
+    try:
+        return spark.sparkContext
+    except Exception:
+        return None
+
+
+def _default_parallelism(spark) -> int:
+    """``sc.defaultParallelism`` classically; on Connect, the session's
+    shuffle-partition setting (the same knob the range exchange would
+    use anyway)."""
+    sc = _spark_context_or_none(spark)
+    if sc is not None:
+        return sc.defaultParallelism
+    return int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+
+
+def _checkpoint_dir(spark) -> str | None:
+    """The durability rule's one input: the session's checkpoint dir, or
+    None when none is set or on Spark Connect (no SparkContext to ask)."""
+    sc = _spark_context_or_none(spark)
+    return None if sc is None else sc.getCheckpointDir()
+
+
+def barrier(df: DataFrame, eager: bool = True) -> DataFrame:
+    """Materialize ``df`` once and truncate its lineage — the engine's one
+    barrier primitive.  Every checkpoint an operator takes (pinning a
+    range-sampled exchange so two consumers agree on partition ids,
+    running a multi-consumer subplan once, bounding an iterative lineage)
+    goes through here.
+
+    The one durability rule: a checkpoint dir set on the SparkContext
+    (``sc.setCheckpointDir(<fault-tolerant path>)``) means a reliable
+    ``checkpoint`` written under it, which survives executor loss;
+    otherwise, and always on Spark Connect, ``localCheckpoint`` (blocks
+    on the executors: fastest, but lost with them).  ``eager=False``
+    defers the materialization to the first action that reads it.
+    """
+    if _checkpoint_dir(df.sparkSession) is not None:
+        return df.checkpoint(eager=eager)
+    return df.localCheckpoint(eager=eager)
+
+
 def parallelize(df: DataFrame, partitions: int | None = None) -> DataFrame:
     """Round-robin repartition to the session's parallelism.
 
@@ -117,9 +164,6 @@ def parallelize(df: DataFrame, partitions: int | None = None) -> DataFrame:
     call it only in front of expression-dense stages where one shuffle of
     the (narrow) input buys full-width compute.
     """
-    from dataqtor_spark.operators.ordered import (
-        _default_parallelism, _spark_context_or_none)
-
     n = partitions or _default_parallelism(df.sparkSession)
     if _spark_context_or_none(df.sparkSession) is None:
         # Spark Connect: no df.rdd to probe the current partition count;
@@ -129,8 +173,7 @@ def parallelize(df: DataFrame, partitions: int | None = None) -> DataFrame:
     return df.repartition(n) if df.rdd.getNumPartitions() < n else df
 
 
-def with_row_id(df: DataFrame, order_by: list[str] | None = None,
-                reliable: bool | None = None) -> DataFrame:
+def with_row_id(df: DataFrame, order_by: list[str] | None = None) -> DataFrame:
     """Materialize an explicit ``__row_id`` long column.
 
     The reference's operators depend on stable pandas row labels
@@ -144,13 +187,9 @@ def with_row_id(df: DataFrame, order_by: list[str] | None = None,
       with NO single-partition sort: the only data-sized exchange is the
       ``repartitionByRange``, so the reproducible path survives 100 TB.
       Side effect: ``ordered_prefix`` pins its range exchange with a lazy
-      checkpoint (lineage truncation; executor-pinned blocks under the
-      default ``localCheckpoint``).  ``reliable`` is forwarded: ``None``
-      (default) auto-selects a reliable checkpoint iff
-      ``sc.getCheckpointDir()`` is configured, ``True``/``False`` force
-      it — see ``ordered_prefix``.  On Spark Connect both checkpoint
-      flavors run as server-side commands (no driver SparkContext is
-      touched); ``reliable=True`` requires the SERVER's checkpoint dir.
+      :func:`barrier` (lineage truncation; a reliable checkpoint iff a
+      checkpoint dir is set, else executor-pinned ``localCheckpoint``
+      blocks).
     - ``order_by`` None → ``monotonically_increasing_id()``: no shuffle, no
       sort; stable for a given materialized snapshot (same file layout ⇒
       same ids), which is exactly the reference's "one cached upload"
@@ -163,7 +202,7 @@ def with_row_id(df: DataFrame, order_by: list[str] | None = None,
         from dataqtor_spark.operators.ordered import ordered_prefix
 
         out = ordered_prefix(df, [F.col(c) for c in order_by],
-                             out_rn=ROW_ID, reliable=reliable)
+                             out_rn=ROW_ID)
         return out.withColumn(ROW_ID, F.col(ROW_ID) - F.lit(1))
     return df.withColumn(ROW_ID, F.monotonically_increasing_id())
 

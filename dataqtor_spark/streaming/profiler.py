@@ -520,6 +520,8 @@ def stream_near_dup_sink(stream: DataFrame, id_col: str, text_col: str,
     from dataqtor_spark.operators import dedup as DD
 
     def _ingest(batch: DataFrame, epoch_id: int) -> None:
+        from dataqtor_spark.session import barrier
+
         spark = batch.sparkSession
         have_index = _fs_exists(spark, f"{path}/sigs")
         b = batch.dropDuplicates([id_col])
@@ -530,8 +532,8 @@ def stream_near_dup_sink(stream: DataFrame, id_col: str, text_col: str,
                 seen = seen.unionByName(
                     spark.read.parquet(f"{path}/dups").select(id_col))
             b = b.join(seen, id_col, "left_anti")
-        sig = DD.minhash_signatures_portable(
-            b, id_col, text_col, num_hashes, shingle_n).localCheckpoint()
+        sig = barrier(DD.minhash_signatures_portable(
+            b, id_col, text_col, num_hashes, shingle_n))
         bnd = sig.select(
             F.col(id_col),
             F.explode(DD._band_hash_array(num_hashes, bands)).alias("bhash"))
@@ -558,16 +560,15 @@ def stream_near_dup_sink(stream: DataFrame, id_col: str, text_col: str,
         old_sigs = (spark.read.parquet(f"{path}/sigs") if have_index
                     else sig.limit(0))
         all_sigs = sig.unionByName(old_sigs)
-        dups = (DD.minhash_similarity(all_sigs, cand, id_col)
-                .filter(F.col("est_jaccard") >= threshold)
-                .groupBy("id_a")
-                .agg(F.min("id_b").alias("dup_of"),
-                     F.max("est_jaccard").alias("est_jaccard"))
-                .withColumnRenamed("id_a", id_col)
-                .localCheckpoint())
+        dups = barrier(DD.minhash_similarity(all_sigs, cand, id_col)
+                       .filter(F.col("est_jaccard") >= threshold)
+                       .groupBy("id_a")
+                       .agg(F.min("id_b").alias("dup_of"),
+                            F.max("est_jaccard").alias("est_jaccard"))
+                       .withColumnRenamed("id_a", id_col))
         dups.write.mode("append").parquet(f"{path}/dups")
-        survivors = (sig.join(dups.select(id_col), id_col, "left_anti")
-                     .localCheckpoint())
+        survivors = barrier(sig.join(dups.select(id_col), id_col,
+                                     "left_anti"))
         # bands BEFORE sigs — see the crash-safety contract above
         (survivors.select(
             F.col(id_col),
@@ -805,6 +806,8 @@ def stream_image_dedup_sink(stream: DataFrame, id_col: str,
     from dataqtor_spark.operators import multimodal as MM
 
     def _ingest(batch: DataFrame, epoch_id: int) -> None:
+        from dataqtor_spark.session import barrier
+
         spark = batch.sparkSession
         have_index = _fs_exists(spark, f"{path}/sigs")
         b = batch.dropDuplicates([id_col])
@@ -814,8 +817,8 @@ def stream_image_dedup_sink(stream: DataFrame, id_col: str,
                 seen = seen.unionByName(
                     spark.read.parquet(f"{path}/dups").select(id_col))
             b = b.join(seen, id_col, "left_anti")
-        sig = (MM.image_phash(b, payload_col, id_col, method, use_codec)
-               .withColumnRenamed("media_id", id_col).localCheckpoint())
+        sig = barrier(MM.image_phash(b, payload_col, id_col, method, use_codec)
+                      .withColumnRenamed("media_id", id_col))
         bnd = sig.select(
             F.col(id_col), F.col("phash"),
             F.explode(MM.phash_bands(F.col("phash"))).alias("c")
@@ -854,16 +857,15 @@ def stream_image_dedup_sink(stream: DataFrame, id_col: str,
                       F.least("id_a", "id_b").alias("id_b"),
                       "__pa", "__pb"))
         cand = wb if cand is None else cand.unionByName(wb).distinct()
-        dups = (cand.withColumn("hamming", ham)
-                .filter(F.col("hamming") <= max_hamming)
-                .groupBy("id_a")
-                .agg(F.min("id_b").alias("dup_of"),
-                     F.min("hamming").alias("hamming"))
-                .withColumnRenamed("id_a", id_col)
-                .localCheckpoint())
+        dups = barrier(cand.withColumn("hamming", ham)
+                       .filter(F.col("hamming") <= max_hamming)
+                       .groupBy("id_a")
+                       .agg(F.min("id_b").alias("dup_of"),
+                            F.min("hamming").alias("hamming"))
+                       .withColumnRenamed("id_a", id_col))
         dups.write.mode("append").parquet(f"{path}/dups")
-        survivors = (sig.join(dups.select(id_col), id_col, "left_anti")
-                     .localCheckpoint())
+        survivors = barrier(sig.join(dups.select(id_col), id_col,
+                                     "left_anti"))
         # bands BEFORE sigs: sigs is the replay gate (the left_anti seen
         # set), so the three appends must fail safe in write order.  A
         # crash after bands but before sigs leaves orphan band rows; the

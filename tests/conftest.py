@@ -23,3 +23,24 @@ def tables(spark):
     names = ["region", "nation", "customer", "supplier", "part",
              "orders", "lineitem", "events", "documents", "embeddings"]
     return {n: _t(spark, SF_DIR, n) for n in names}
+
+
+@pytest.fixture
+def checkpoint_calls(spark, monkeypatch):
+    """Names of the DataFrame checkpoint methods called during the test
+    (``"checkpoint"`` / ``"localCheckpoint"``), in call order — which
+    flavour ``session.barrier`` picked."""
+    cls = type(spark.range(1))
+    calls = []
+
+    def spy(name):
+        real = getattr(cls, name)
+
+        def wrapper(self, *a, **k):
+            calls.append(name)
+            return real(self, *a, **k)
+        return wrapper
+
+    for name in ("checkpoint", "localCheckpoint"):
+        monkeypatch.setattr(cls, name, spy(name))
+    return calls

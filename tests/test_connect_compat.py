@@ -1,12 +1,12 @@
-"""Spark Connect compatibility of the ordered primitives.
+"""Spark Connect compatibility of the ordered primitives and the barrier.
 
 A Connect session has no driver-side SparkContext: ``spark.sparkContext``
 raises, ``df.rdd`` doesn't exist, yet ``checkpoint``/``localCheckpoint``
 work as server-executed commands.  ``ordered_prefix`` /
-``ordered_running_max`` / ``with_row_id`` / ``parallelize`` must therefore
-never touch the context when it is absent.  The dispatch helpers are unit
-tested here with a faked Connect session (the container has no grpcio, so
-a real Connect round-trip is skip-gated below)."""
+``ordered_running_max`` / ``with_row_id`` / ``parallelize`` / ``barrier``
+must therefore never touch the context when it is absent.  The dispatch
+helpers are unit tested here with a faked Connect session (the container
+has no grpcio, so a real Connect round-trip is skip-gated below)."""
 
 import pytest
 
@@ -31,8 +31,8 @@ class _FakeConnectSession:
 
 
 def test_helpers_dispatch_without_spark_context():
-    from dataqtor_spark.operators.ordered import (
-        _default_parallelism, _spark_context_or_none)
+    from dataqtor_spark.session import (_default_parallelism,
+                                        _spark_context_or_none)
 
     fake = _FakeConnectSession()
     assert _spark_context_or_none(fake) is None
@@ -40,30 +40,31 @@ def test_helpers_dispatch_without_spark_context():
 
 
 def test_helpers_use_context_when_present(spark):
-    from dataqtor_spark.operators.ordered import (
-        _default_parallelism, _spark_context_or_none)
+    from dataqtor_spark.session import (_default_parallelism,
+                                        _spark_context_or_none)
 
     assert _spark_context_or_none(spark) is spark.sparkContext
     assert _default_parallelism(spark) == spark.sparkContext.defaultParallelism
 
 
 def test_ordered_prefix_never_reads_context_when_absent(spark, monkeypatch):
-    """Simulate Connect on a classic frame: patch the session object seen
-    by the helpers so sparkContext access raises, and assert the ordered
-    primitives still produce correct output through the localCheckpoint
-    command path."""
+    """Simulate Connect on a classic frame: patch the session helper so
+    the SparkContext looks absent, and assert the ordered primitives
+    still produce correct output through the localCheckpoint command
+    path."""
+    from dataqtor_spark import session as S
     from dataqtor_spark.operators import ordered as O
 
     df = spark.createDataFrame([(i, float((i * 7) % 5)) for i in range(40)],
                                "id long, v double")
-    real_ctx = O._spark_context_or_none
+    real_ctx = S._spark_context_or_none
 
-    monkeypatch.setattr(O, "_spark_context_or_none", lambda s: None)
+    monkeypatch.setattr(S, "_spark_context_or_none", lambda s: None)
     got = {r["id"]: r["rn"] for r in O.ordered_prefix(
         df, [F.col("v"), F.col("id")], out_rn="rn", partitions=4).collect()}
     mx = {r["id"]: r["m"] for r in O.ordered_running_max(
         df, [F.col("id")], F.col("v"), "m", partitions=4).collect()}
-    monkeypatch.setattr(O, "_spark_context_or_none", real_ctx)
+    monkeypatch.setattr(S, "_spark_context_or_none", real_ctx)
 
     ref = sorted((r["v"], r["id"]) for r in df.collect())
     for rank, (_v, i) in enumerate(ref, start=1):
@@ -74,27 +75,26 @@ def test_ordered_prefix_never_reads_context_when_absent(spark, monkeypatch):
         run = r["v"] if run is None else max(run, r["v"])
 
 
-def test_pin_checkpoint_dispatch_when_connect(spark, monkeypatch, tmp_path):
-    """_pin's Connect branch (no SparkContext): reliable=True issues the
-    server-executed df.checkpoint command; anything else falls back to
-    localCheckpoint — the r8 fallback (ordered.py), pinned here so a
-    regression cannot silently re-read the context."""
-    from dataqtor_spark.operators import ordered as O
+def test_pin_checkpoint_dispatch_when_connect(spark, monkeypatch, tmp_path,
+                                              checkpoint_calls):
+    """``session.barrier`` on Connect (no SparkContext to ask for a
+    checkpoint dir) is always ``localCheckpoint`` — even when the
+    classic context underneath has a dir set."""
+    from dataqtor_spark import session as S
 
     df = spark.range(10)
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "ck"))
+    ck = tmp_path / "ck"
+    spark.sparkContext.setCheckpointDir(str(ck))
     try:
-        monkeypatch.setattr(O, "_spark_context_or_none", lambda s: None)
-        # reliable=True → checkpoint command (needs the configured dir)
-        assert O._pin(df, True).count() == 10
-        # None/False → the no-checkpoint localCheckpoint fallback
-        assert O._pin(df, None).count() == 10
-        assert O._pin(df, False).count() == 10
+        monkeypatch.setattr(S, "_spark_context_or_none", lambda s: None)
+        assert S.barrier(df).count() == 10
+        assert S.barrier(df, eager=False).count() == 10
     finally:
-        # a leaked checkpoint dir flips durability-aware operators
-        # (connected_components) into their reliable-checkpoint mode for
-        # every later test in the session
+        # a leaked checkpoint dir switches every later barrier in the
+        # session to reliable checkpoints
         spark.sparkContext.setCheckpointDir(None)
+    assert checkpoint_calls == ["localCheckpoint", "localCheckpoint"]
+    assert not [p for p in ck.rglob("*") if p.is_file()]
 
 
 def test_connect_round_trip():

@@ -433,63 +433,52 @@ def test_ordered_running_max_matches_window_form(spark, vals):
         assert inc[i] == c, (i, inc[i], c)
 
 
-def test_ordered_prefix_reliable_mode_agrees(spark):
+def test_ordered_prefix_reliable_mode_agrees(spark, tmp_path,
+                                            checkpoint_calls):
+    """Checkpoint dir set -> ``session.barrier`` writes a reliable
+    checkpoint under it, and ``ordered_prefix`` rows equal local mode."""
     from dataqtor_spark.operators.ordered import ordered_prefix
 
     df = spark.range(0, 500).select(
         F.col("id"), ((F.col("id") * 37) % 101).cast("double").alias("v"))
     order = [F.col("v"), F.col("id")]
-    base = {r["id"]: (r["rn"], r["c"]) for r in ordered_prefix(
-        df, order, sums={"c": F.col("v")}, out_rn="rn",
-        partitions=7).collect()}
-    rel = {r["id"]: (r["rn"], r["c"]) for r in ordered_prefix(
-        df, order, sums={"c": F.col("v")}, out_rn="rn",
-        partitions=7, reliable=True).collect()}
+
+    def run():
+        return {r["id"]: (r["rn"], r["c"]) for r in ordered_prefix(
+            df, order, sums={"c": F.col("v")}, out_rn="rn",
+            partitions=7).collect()}
+
+    base = run()
+    assert checkpoint_calls == ["localCheckpoint"]
+    sc = spark.sparkContext
+    ck = tmp_path / "ck"
+    sc.setCheckpointDir(str(ck))
+    try:
+        rel = run()
+    finally:
+        # a leaked checkpoint dir switches every later barrier in the
+        # session to reliable checkpoints
+        sc.setCheckpointDir(None)
+    assert checkpoint_calls == ["localCheckpoint", "checkpoint"]
+    assert [p for p in ck.rglob("*") if p.is_file()], \
+        "reliable checkpoint wrote nothing under the dir"
     assert base == rel
 
 
-def test_ordered_prefix_reliable_auto_resolution(spark):
-    """reliable=None follows the configured checkpoint dir; an explicit
-    True without one warns on local masters (and still computes)."""
-    import warnings
+def test_ordered_prefix_reliable_auto_resolution(spark, checkpoint_calls):
+    """No checkpoint dir set -> ``session.barrier`` (and so the
+    ``ordered_prefix`` pin) is a ``localCheckpoint``, eager or lazy."""
+    from dataqtor_spark.operators.ordered import ordered_prefix
+    from dataqtor_spark.session import barrier
 
-    from dataqtor_spark.operators.ordered import (_resolve_reliable,
-                                                  ordered_prefix)
-
-    sc = spark.sparkContext
-
-    class _FakeSC:
-        def __init__(self, ckpt, master):
-            self._ckpt, self.master = ckpt, master
-
-        def getCheckpointDir(self):
-            return self._ckpt
-
-        def setCheckpointDir(self, d):
-            self._ckpt = d
-
-    # auto: no dir -> local checkpoint; dir set -> reliable
-    assert _resolve_reliable(_FakeSC(None, "local[4]"), None) is False
-    assert _resolve_reliable(_FakeSC("/ckpt", "spark://h:7077"), None) is True
-    # explicit True, no dir: cluster master refuses, local warns + falls back
-    import pytest as _pytest
-    with _pytest.raises(RuntimeError, match="setCheckpointDir"):
-        _resolve_reliable(_FakeSC(None, "spark://h:7077"), True)
-    fake = _FakeSC(None, "local[4]")
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        assert _resolve_reliable(fake, True) is True
-    assert any("checkpoint" in str(x.message) for x in w)
-    assert fake.getCheckpointDir() is not None
-    # end-to-end reliable-checkpoint equivalence is covered by
-    # test_ordered_prefix_reliable_mode_agrees above (auto+dir-set takes
-    # the identical rp.checkpoint(eager=False) branch); not re-run here
-    # to avoid pinning a checkpoint dir on the shared session fixture.
-    assert sc is spark.sparkContext
+    assert spark.sparkContext.getCheckpointDir() is None
+    assert barrier(spark.range(20)).count() == 20
+    assert barrier(spark.range(20), eager=False).count() == 20
     df = spark.range(0, 50).select(F.col("id"), (F.col("id") % 7).alias("v"))
     got = ordered_prefix(df, [F.col("v"), F.col("id")], out_rn="rn",
-                         reliable=None, partitions=3).count()
+                         partitions=3).count()
     assert got == 50
+    assert checkpoint_calls == ["localCheckpoint"] * 3
 
 
 def test_with_row_id_ordered_matches_window_row_number(spark):

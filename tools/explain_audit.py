@@ -2,9 +2,10 @@
 scale-relevant plan facts (scans with pushed filters + read schema, join
 strategies, exchanges, top-k operators) and write PLANS.md.
 
-Plan-audit mode: ``DataFrame.localCheckpoint``/``checkpoint`` are patched
-to identity for the audit process, because a checkpoint truncates
-``explain('formatted')`` at the checkpoint boundary — 40 of 306 queries
+Plan-audit mode: ``session.barrier`` (the engine's one checkpoint
+primitive) is patched to identity while each query is built and
+explained, because a checkpoint truncates ``explain('formatted')`` at
+the checkpoint boundary — 40 of 306 queries
 (lm01, dsir01/02, d03, sel01/02, bpe02, ...) previously showed an empty
 plan with "exchanges: 0".  Eliding the pin is safe here: this tool only
 explains plans, never compares results, so the partition-id pinning and
@@ -39,10 +40,6 @@ INTERESTING = (
 )
 
 
-_ELIDED = 0
-_ELIDE_CAP: int | None = None
-
-
 def _observed_root(df) -> bool:
     """True when an ``Observation`` rides this frame (root analyzed node
     is CollectMetrics).  Root-node check only — a full plan toString on
@@ -55,58 +52,41 @@ def _observed_root(df) -> bool:
         return False
 
 
-def _patch_checkpoints(max_elide: int | None = None) -> None:
-    """Route DataFrame.(local)checkpoint to identity, counting elisions.
+@contextlib.contextmanager
+def elided_barriers(max_elide: int | None = None):
+    """Route ``session.barrier`` to identity; yields a list that gets one
+    entry per elided barrier, and restores the real barrier on exit.
+    Every engine checkpoint goes through that one function (each call
+    site imports it at call time), so this single patch reaches them all.
 
-    Spark 4 note: ``pyspark.sql.DataFrame`` is the abstract interface;
-    instance lookups resolve on the concrete classic (and, if importable,
-    Connect) subclass, so those are what must be patched.
-
-    r16 fixes (VERDICT r15 item 8):
     - An elided barrier that carries an ``Observation`` still fires the
       metrics via ``count()`` — ``connected_components`` blocks on
       ``obs.get`` after each round's barrier, so pure-identity elision
-      deadlocked every CC-consuming query's ``--plan`` capture (the d08
-      hang).
-    - ``max_elide`` caps elisions per query (reset ``_ELIDED`` between
-      queries): past the cap the REAL checkpoint runs, truncating
+      would deadlock every CC-consuming query's plan capture.
+    - ``max_elide`` caps elisions (enter once per query): past the cap
+      the REAL barrier runs, truncating
       recursive lineage (CC label rounds reference the previous round's
       plan ~6x, so an uncapped elided plan grows exponentially and
       ``explain`` never returns).
     """
-    global _ELIDE_CAP
-    _ELIDE_CAP = max_elide
-    import pyspark.sql as pssql
+    from dataqtor_spark import session
 
-    def _make(real):
-        def _elide(self, *args, **kwargs):  # noqa: ANN001, ARG001
-            # accept any checkpoint signature (Spark 4 adds keyword
-            # storageLevel=... to localCheckpoint) — audit mode must
-            # never TypeError on an argument the real method would take
-            global _ELIDED
-            if _ELIDE_CAP is not None and _ELIDED >= _ELIDE_CAP:
-                return real(self, *args, **kwargs)
-            _ELIDED += 1
-            if _observed_root(self):
-                self.count()    # fire the Observation; keep lineage
-            return self
-        return _elide
+    real = session.barrier
+    elided = []
 
-    classes = [pssql.DataFrame]
+    def _elide(df, eager=True):
+        if max_elide is not None and len(elided) >= max_elide:
+            return real(df, eager)
+        elided.append(df)
+        if _observed_root(df):
+            df.count()    # fire the Observation; keep lineage
+        return df
+
+    session.barrier = _elide
     try:
-        from pyspark.sql.classic.dataframe import DataFrame as ClassicDF
-        classes.append(ClassicDF)
-    except ImportError:
-        pass
-    try:
-        from pyspark.sql.connect.dataframe import DataFrame as ConnectDF
-        classes.append(ConnectDF)
-    except ImportError:
-        pass
-    for cls in classes:
-        real_lc, real_cp = cls.localCheckpoint, cls.checkpoint
-        cls.localCheckpoint = _make(real_lc)
-        cls.checkpoint = _make(real_cp)
+        yield elided
+    finally:
+        session.barrier = real
 
 
 def main() -> None:
@@ -120,7 +100,6 @@ def main() -> None:
     sf_dir = dirs[0] if dirs else "/root/testdata/sf0.01"
     assert len(dirs) <= 1, f"multiple sf_dirs given: {dirs}"
 
-    _patch_checkpoints(max_elide=12)
     from dataqtor_spark.queries import QUERIES
     from dataqtor_spark.session import get_spark
 
@@ -149,19 +128,17 @@ def main() -> None:
         "signature legs while its wall-clock dropped 3.3s -> 2.0s).",
         "",
     ]
-    global _ELIDED
     for name, fn in QUERIES.items():
-        _ELIDED = 0
         try:
-            df = fn(spark, sf_dir)
-            buf = io.StringIO()
-            with contextlib.redirect_stdout(buf):
-                df.explain("formatted")
+            with elided_barriers(max_elide=12) as elided:
+                df = fn(spark, sf_dir)
+                buf = io.StringIO()
+                with contextlib.redirect_stdout(buf):
+                    df.explain("formatted")
             text = buf.getvalue()
         except Exception as exc:  # noqa: BLE001
             out += [f"## {name}", "", f"error: {exc}", ""]
             continue
-        elided = _ELIDED
         lines = []
         n_exchanges = 0
         for raw in text.splitlines():
@@ -182,7 +159,7 @@ def main() -> None:
                 uniq.append(l)
         hdr = f"exchanges: {n_exchanges}"
         if elided:
-            hdr += f" | pinned-elided: {elided}"
+            hdr += f" | pinned-elided: {len(elided)}"
         out += [f"## {name}", "", hdr, "```"]
         out += uniq[:20]
         out += ["```", ""]

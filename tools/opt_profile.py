@@ -68,63 +68,29 @@ def main() -> None:
             fn(spark, sf_dir).count()                 # offline index build
         if plan_dir and tag:
             os.makedirs(plan_dir, exist_ok=True)
-            # patch checkpoints to identity ONLY for the explain (a
-            # checkpoint truncates explain output) and RESTORE them
-            # before timing — leaving the patch live would time every
-            # later query without checkpoint materialization
+            # elide barriers ONLY for the explain (a checkpoint truncates
+            # explain output); the context restores the real barrier
+            # before timing, so no timed rep runs without materialization
             import contextlib
             import io
 
-            import pyspark.sql as pssql
-            import tools.explain_audit as _ea
-            from tools.explain_audit import _patch_checkpoints
-            saved = []
-            classes = [pssql.DataFrame]
-            try:
-                from pyspark.sql.classic.dataframe import \
-                    DataFrame as ClassicDF
-                classes.append(ClassicDF)
-            except ImportError:
-                pass
-            # mirror _patch_checkpoints' full class list (ADVICE r15):
-            # under Spark Connect the patch also lands on ConnectDF, and
-            # a saved list missing it would leak the identity patch past
-            # the finally — every later timed rep would run with
-            # checkpoints elided (mistimed without materialization)
-            try:
-                from pyspark.sql.connect.dataframe import \
-                    DataFrame as ConnectDF
-                classes.append(ConnectDF)
-            except ImportError:
-                pass
-            for cls in classes:
-                saved.append((cls, cls.localCheckpoint, cls.checkpoint))
-            # cap elisions (r16, VERDICT item 8): recursively-checkpointed
-            # lineage (connected_components label rounds) grows the elided
-            # plan exponentially — past the cap the real checkpoint runs
-            # and truncates, so d08-style captures terminate
-            _ea._ELIDED = 0
-            _patch_checkpoints(max_elide=12)
-            try:
-                buf = io.StringIO()
+            from tools.explain_audit import elided_barriers
+            buf = io.StringIO()
+            with elided_barriers(max_elide=12) as elided:
+                df = fn(spark, sf_dir)
                 with contextlib.redirect_stdout(buf):
-                    fn(spark, sf_dir).explain("formatted")
-                n_elided = _ea._ELIDED
-                hdr = ""
-                if n_elided:
-                    hdr = (f"-- pinned-elided: {n_elided} checkpoint "
-                           "boundary(ies) elided for plan visibility."
-                           "\n-- Subplans below an elided checkpoint "
-                           "appear DUPLICATED in this dump (each consumer"
-                           "\n-- replays the lineage); production "
-                           "materializes each checkpointed frame ONCE.\n\n")
-                with open(os.path.join(plan_dir, f"{name}_{tag}.txt"),
-                          "w") as f:
-                    f.write(hdr + buf.getvalue())
-            finally:
-                for cls, lc, cp in saved:
-                    cls.localCheckpoint = lc
-                    cls.checkpoint = cp
+                    df.explain("formatted")
+            hdr = ""
+            if elided:
+                hdr = (f"-- pinned-elided: {len(elided)} checkpoint "
+                       "boundary(ies) elided for plan visibility."
+                       "\n-- Subplans below an elided checkpoint "
+                       "appear DUPLICATED in this dump (each consumer"
+                       "\n-- replays the lineage); production "
+                       "materializes each checkpointed frame ONCE.\n\n")
+            with open(os.path.join(plan_dir, f"{name}_{tag}.txt"),
+                      "w") as f:
+                f.write(hdr + buf.getvalue())
         samples = []
         for r in range(reps):
             if cold and name not in AT_REST:
