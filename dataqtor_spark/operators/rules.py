@@ -209,6 +209,13 @@ def evaluate_rules(df: DataFrame, rules: list[Rule]) -> DataFrame:
     out_of_format_records, proper_format_records, dq_score) — the
     reference's before/after summary schema (home.py:41-52,1139-1150).
     """
+    return scored_rules(df, rules).drop("overall_dq_score")
+
+
+def scored_rules(df: DataFrame, rules: list[Rule]) -> DataFrame:
+    """:func:`evaluate_rules` plus ``overall_dq_score`` (A16, the same
+    value :func:`overall_score` gives) on every row, computed from the
+    same one-row aggregate: summary and overall score in one job."""
     aggs = [F.count(F.lit(1)).alias("__total")]
     for i, r in enumerate(rules):
         aggs.append(F.coalesce(F.sum(F.col(r.column).isNull().cast("long")), F.lit(0))
@@ -216,12 +223,15 @@ def evaluate_rules(df: DataFrame, rules: list[Rule]) -> DataFrame:
         aggs.append(F.coalesce(F.sum(r.violation.cast("long")), F.lit(0))
                     .alias(f"__viol_{i}"))
     one = df.agg(*aggs)
-    structs = []
+    structs, scores = [], []
     for i, r in enumerate(rules):
         total = F.col("__total")
         nulls = F.col(f"__nulls_{i}")
         viol = F.col(f"__viol_{i}")
         proper = total - nulls - viol
+        score = (F.when(total > 0, F.round(proper * 100.0 / total, 2))
+                 .otherwise(F.lit(0.0)))
+        scores.append(score)
         structs.append(F.struct(
             F.lit(r.name).alias("rule"),
             F.lit(r.column).alias("column"),
@@ -229,10 +239,16 @@ def evaluate_rules(df: DataFrame, rules: list[Rule]) -> DataFrame:
             nulls.alias("null_records"),
             viol.alias("out_of_format_records"),
             proper.alias("proper_format_records"),
-            F.when(total > 0, F.round(proper * 100.0 / total, 2))
-            .otherwise(F.lit(0.0)).alias("dq_score"),
+            score.alias("dq_score"),
         ))
-    return one.select(F.explode(F.array(*structs)).alias("s")).select("s.*")
+    # avg(dq_score) as Spark's Average computes it: a left-to-right double
+    # sum from 0.0, divided by the row count
+    overall = F.round(F.aggregate(F.array(*scores), F.lit(0.0),
+                                  lambda acc, x: acc + x)
+                      / max(len(rules), 1), 2)
+    return (one.select(F.explode(F.array(*structs)).alias("s"),
+                       overall.alias("overall_dq_score"))
+            .select("s.*", "overall_dq_score"))
 
 
 def overall_score(summary: DataFrame) -> DataFrame:

@@ -2,9 +2,10 @@
 
 The reference loads exactly one mutable pandas table per uploaded file and
 caches it across reruns (/root/reference/home.py:55-62).  Our equivalent is:
-read → freeze schema → materialize an explicit ``__row_id`` → (optionally)
-persist.  All downstream operators are pure ``DataFrame -> DataFrame``
-transforms; "in-place mutation" of the reference becomes lineage.
+read → freeze schema → materialize an explicit ``__row_id`` → pin that
+frame once (a lazy :func:`barrier`).  All downstream operators are pure
+``DataFrame -> DataFrame`` transforms; "in-place mutation" of the
+reference becomes lineage.
 
 Scale notes (100 TB target):
 - AQE is on: runtime coalescing, skew-join splitting, dynamic broadcast.
@@ -30,6 +31,17 @@ def get_spark(app_name: str = "dataqtor_spark", master: str | None = None) -> Sp
     Honors ``SPARK_GRAFT_CPUS`` for local parallelism.  Session timezone is
     pinned to UTC so timestamp values are engine-independent (the DuckDB
     oracle returns naive/UTC datetimes).
+
+    DataFrame origin capture is off
+    (``spark.python.sql.dataFrameDebugging.enabled=false``): with it on,
+    every ``F.*``/``Column`` call made while a session is active costs
+    five or more extra py4j round trips (active-session lookup, origin
+    class lookup, a conf read, set and clear of the JVM-side origin),
+    which is most of the Python build time of a rule set or a profile.
+    PySpark reads the flag once per process, on first use, so it is set
+    here, in the session's initial conf.  What is lost: the Python ``file:line`` in
+    the query context of runtime errors; errors still raise with the
+    JVM's message.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = (
@@ -46,6 +58,7 @@ def get_spark(app_name: str = "dataqtor_spark", master: str | None = None) -> Sp
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if master is not None:
         builder = builder.master(master)
@@ -212,11 +225,10 @@ def ingest(
     path: str,
     fmt: str | None = None,
     row_id_order: list[str] | None = None,
-    persist: bool = False,
     schema: str | None = None,
     **options,
 ) -> DataFrame:
-    """Read a dataset and materialize row identity.
+    """Read a dataset, materialize row identity, and pin the result once.
 
     Mirrors the reference's upload step (excel-then-csv fallback at
     /root/reference/home.py:55-62) with Spark-native sources.  ``fmt`` is
@@ -230,6 +242,17 @@ def ingest(
     ``schema`` (DDL string) skips inference and enables PERMISSIVE
     malformed-row capture for csv/json (pass ``mode`` +
     ``columnNameOfCorruptRecord`` in options).
+
+    The upload is pinned once: the frame with its ``__row_id`` goes
+    through a lazy :func:`barrier`, whose rows the first action that
+    reads it materializes (the shuffle stages of the row-id plan, as for
+    any lazy barrier under AQE, run when the pin is taken).  Every later
+    step (profile, detect, repairs, save) reads the pinned rows instead
+    of re-running the read and the row-id plan (for ``row_id_order``, its
+    partition-id exchange, row-number window and carry join), the
+    ``monotonically_increasing_id`` ids stay fixed, and the workbench
+    keeps working when the source file is overwritten or deleted after
+    that first action.
     """
     if fmt is None:
         ext = os.path.splitext(path)[1].lower().lstrip(".")
@@ -255,10 +278,7 @@ def ingest(
             df = spark.createDataFrame(pd.read_excel(path, **options))
     else:
         raise ValueError(f"unsupported format: {fmt}")
-    df = with_row_id(df, order_by=row_id_order)
-    if persist:
-        df = df.persist()
-    return df
+    return barrier(with_row_id(df, order_by=row_id_order), eager=False)
 
 
 def write_dataset(df: DataFrame, path: str, fmt: str = "parquet", mode: str = "overwrite",

@@ -11,11 +11,16 @@ Profiler → Detector → Corrector, for users switching from the reference.
     wb.save("clean.parquet")                        # download
 
 The reference mutates one cached table in place; here every correction is
-a lineage step on an immutable head (RepairSession), and before/after
-scores are snapshots of two lineage points.
+a lineage step on an immutable head (RepairSession) over the upload, which
+``load`` pins once.  ``detect()`` runs its one fused aggregate at call
+time (the overall score in the same job) and keeps the result rows;
+``report()`` builds the before/after table from the kept rows without
+rescanning any lineage point.
 """
 
 from __future__ import annotations
+
+import functools
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -31,7 +36,9 @@ class Workbench:
 
     def __init__(self, df: DataFrame):
         self._sess = RP.RepairSession(df)
-        self._summaries: list[DataFrame] = []
+        # one frame over local rows per detect(): its scored_rules rows,
+        # tagged with the measurement number
+        self._measurements: list[DataFrame] = []
 
     # --- E1: upload -------------------------------------------------------
 
@@ -52,24 +59,26 @@ class Workbench:
         return P.null_profile(self.df, cols)
 
     def detect(self, rules: list[R.Rule]) -> DataFrame:
-        """Evaluate rules on the current head; the summary is retained so
-        ``report`` can show the before/after progression (A15)."""
-        summary = R.evaluate_rules(self.df, rules).withColumn(
-            "measurement", F.lit(len(self._summaries)))
-        self._summaries.append(summary)
-        return summary
+        """Evaluate rules on the current head now: one aggregate job, which
+        also computes the overall score.  The result rows are kept so
+        ``report`` can show the before/after progression (A15) without
+        rescanning; the returned DataFrame reads those rows."""
+        scored = R.scored_rules(self.df, rules).withColumn(
+            "measurement", F.lit(len(self._measurements)))
+        kept = self.df.sparkSession.createDataFrame(scored.toArrow(),
+                                                    scored.schema)
+        self._measurements.append(kept)
+        return kept.drop("overall_dq_score")
 
     def report(self) -> DataFrame:
-        """All retained measurements unioned (the before/after table),
-        with the overall score per measurement (A16)."""
-        if not self._summaries:
+        """All kept measurements (the before/after table), with the
+        overall score per measurement (A16) — built from the rows each
+        ``detect`` kept, no rule scan runs."""
+        if not self._measurements:
             raise ValueError("no measurements yet — call detect() first")
-        out = self._summaries[0]
-        for s in self._summaries[1:]:
-            out = out.unionByName(s)
-        overall = (out.groupBy("measurement")
-                   .agg(F.round(F.avg("dq_score"), 2).alias("overall_dq_score")))
-        return out.join(overall, "measurement")
+        out = functools.reduce(DataFrame.unionByName, self._measurements)
+        return out.select("measurement",
+                          *[c for c in out.columns if c != "measurement"])
 
     # --- E3: corrector (each returns self for chaining) --------------------
 

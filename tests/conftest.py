@@ -44,3 +44,22 @@ def checkpoint_calls(spark, monkeypatch):
     for name in ("checkpoint", "localCheckpoint"):
         monkeypatch.setattr(cls, name, spy(name))
     return calls
+
+
+@pytest.fixture
+def py4j_calls(spark, monkeypatch):
+    """The py4j round trips (``GatewayClient.send_command``) made during
+    the test, one entry per call: the command's first line (``"c"`` call,
+    ``"r"`` reflection, ``"m"`` memory — the garbage-collector detaches,
+    which land whenever Python's GC runs)."""
+    from py4j.java_gateway import GatewayClient
+
+    real = GatewayClient.send_command
+    calls = []
+
+    def counting(self, command, *a, **k):
+        calls.append(command.split("\n", 1)[0])
+        return real(self, command, *a, **k)
+
+    monkeypatch.setattr(GatewayClient, "send_command", counting)
+    return calls

@@ -70,14 +70,17 @@ def test_tools_never_patch_dataframe_classes():
     assert not found, f"tools patch DataFrame class members: {found}"
 
 
-def test_every_family_routes_through_session_barrier(spark, monkeypatch):
+def test_every_family_routes_through_session_barrier(spark, monkeypatch,
+                                                      tmp_path):
     """A wrapped ``session.barrier`` sees the ordered pin (lazy), the
+    workbench upload pin (lazy, one more than the ordered row ids), the
     connected-components edges and rounds, and an eager dedup and
     textstats barrier — with results unchanged."""
     from dataqtor_spark import session
     from dataqtor_spark.operators import dedup as DD
     from dataqtor_spark.operators import textstats as TX
     from dataqtor_spark.operators.ordered import ordered_prefix
+    from dataqtor_spark.workbench import Workbench
 
     nums = spark.range(0, 200).select(
         F.col("id"), ((F.col("id") * 13) % 17).alias("v"))
@@ -91,6 +94,8 @@ def test_every_family_routes_through_session_barrier(spark, monkeypatch):
         "ordered": lambda: {r["id"]: r["rn"] for r in ordered_prefix(
             nums, [F.col("v"), F.col("id")], out_rn="rn",
             partitions=4).collect()},
+        "workbench": lambda: {r["id"]: r["__row_id"] for r in Workbench.load(
+            spark, upload, row_id_order=["v", "id"]).df.collect()},
         "cc": lambda: {r["id"]: r["component"] for r in
                        DD.connected_components(_cc_pairs(spark)).collect()},
         "dedup": lambda: sorted(tuple(r) for r in DD.ngram_jaccard_pairs(
@@ -99,6 +104,8 @@ def test_every_family_routes_through_session_barrier(spark, monkeypatch):
         "textstats": lambda: [tuple(r) for r in TX.bm25_search(
             docs, ["spark", "fox"]).collect()],
     }
+    upload = str(tmp_path / "upload")
+    nums.write.parquet(upload)
     want = {k: run() for k, run in runs.items()}
     assert want["cc"] == _CC_WANT
 
@@ -116,6 +123,8 @@ def test_every_family_routes_through_session_barrier(spark, monkeypatch):
         assert seen, f"{key}: session.barrier not reached"
         if key == "ordered":
             assert seen == [False]
+        elif key == "workbench":
+            assert seen == [False, False], "ordered pin + upload pin"
         else:
             assert all(seen), f"{key}: expected eager barriers, got {seen}"
         if key == "cc":

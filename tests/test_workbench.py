@@ -1,6 +1,8 @@
 """End-to-end workbench lifecycle: the reference's upload → profile →
 detect → correct → re-detect → report → download loop."""
 
+import operator
+
 import pyspark.sql.functions as F
 
 from dataqtor_spark import Workbench
@@ -181,3 +183,95 @@ def test_metrics_repository_anomaly_detection(spark, tmp_path):
     assert res["total_records"]["is_anomaly"] is False  # constant metric
     # constant history -> zero variance -> NULL z, never a false alarm
     assert res["total_records"]["z"] is None
+
+
+def _upload(spark, n=300):
+    return spark.range(0, n).select(
+        F.col("id"),
+        F.when(F.col("id") % 7 == 0, None)
+         .otherwise(F.concat(F.lit("n "), F.col("id").cast("string")))
+         .alias("name"),
+        (F.col("id") % 13).alias("v"))
+
+
+def _upload_rules():
+    return [R.rule_no_digits("name", name="no_digits"),
+            R.rule_no_spaces("name", name="no_spaces"),
+            R.rule_compare("v", ">=", 3, name="v_ge_3")]
+
+
+def test_workbench_survives_overwritten_upload(spark, tmp_path):
+    """The upload is pinned once at load: overwriting the source file
+    after the first detect does not break later steps (no row_id_order,
+    so the row ids are monotonically_increasing_id)."""
+    src = str(tmp_path / "upload")
+    _upload(spark).write.parquet(src)
+    wb = Workbench.load(spark, src)
+    first = wb.detect(_upload_rules()).collect()
+
+    _upload(spark, 50).write.mode("overwrite").parquet(src)
+    wb.fill_nulls("name", "filled")
+    after = {r["rule"]: r for r in wb.detect(_upload_rules()).collect()}
+    assert after["no_digits"]["total_records"] == 300
+    assert after["no_digits"]["null_records"] == 0
+
+    rep = wb.report().collect()
+    m0 = [r.asDict() for r in rep if r["measurement"] == 0]
+    for r in m0:
+        del r["overall_dq_score"]
+    by_rule = operator.itemgetter("rule")
+    assert sorted(m0, key=by_rule) == sorted((r.asDict() for r in first),
+                                             key=by_rule)
+
+
+def test_detect_and_report_match_lazy_evaluation(spark):
+    """detect() rows equal a lazy evaluate_rules collect, and report()'s
+    overall score equals groupBy(measurement) + round(avg(dq_score), 2)
+    over the same rows."""
+    wb = Workbench(_upload(spark))
+    detected = wb.detect(_upload_rules())
+    lazy = (R.evaluate_rules(wb.df, _upload_rules())
+            .withColumn("measurement", F.lit(0)))
+    assert detected.schema == lazy.schema
+    assert sorted(detected.collect()) == sorted(lazy.collect())
+
+    wb.fill_nulls("name", "x").find_replace("name", " ", "")
+    wb.detect(_upload_rules())
+    rep = wb.report()
+    summary = rep.drop("overall_dq_score")
+    old = summary.join(
+        summary.groupBy("measurement")
+        .agg(F.round(F.avg("dq_score"), 2).alias("overall_dq_score")),
+        "measurement")
+    assert rep.columns == old.columns
+    assert sorted(rep.collect()) == sorted(old.collect())
+    overall = {r["measurement"]: r["overall_dq_score"] for r in rep.collect()}
+    assert overall[1] > overall[0]
+
+
+def test_report_reads_only_kept_rows(spark):
+    """After two detects, report() plans over local rows only: no file
+    scan, no RDD, no rule re-evaluation."""
+    wb = Workbench(_upload(spark))
+    wb.detect(_upload_rules())
+    wb.fill_nulls("name", "x")
+    wb.detect(_upload_rules())
+    plan = wb.report()._jdf.queryExecution().optimizedPlan()
+    leaves = plan.collectLeaves()
+    names = {leaves.apply(i).nodeName() for i in range(leaves.size())}
+    assert names == {"LocalRelation"}, names
+
+
+def test_pinned_upload_plans_skip_row_id_replay(spark, tmp_path):
+    """With row_id_order, the row-id plan (partition-id exchange, row
+    number window, carry join) runs once at load; later steps read the
+    pin."""
+    src = str(tmp_path / "upload")
+    _upload(spark).write.parquet(src)
+    wb = Workbench.load(spark, src, row_id_order=["v", "id"])
+    wb.drop_rows([1, 2, 3])
+    for df in (wb.profile(), wb.df):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "Window" not in plan
+        assert "hashpartitioning(__pid" not in plan
+    assert wb.df.count() == 297
